@@ -16,71 +16,22 @@ from . import joins  # noqa: F401,E402  (§2.4 equi/semi/anti/theta joins)
 from . import windows  # noqa: F401,E402  (A3-A5, K3, T4)
 from . import markov  # noqa: F401,E402  (M1-M4)
 from . import scoring  # noqa: F401,E402  (A7, A8)
-
-try:  # families added as the build widens; keep imports resilient
-    from . import sketches  # noqa: F401  (K1, K2, K4, K5)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import graph  # noqa: F401  (G1-G3)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import text  # noqa: F401  (dedup / text analysis)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import similarity  # noqa: F401  (ANN / embedding search)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import generator_queries  # noqa: F401  (S1)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import multimodal_queries  # noqa: F401  (binary columns)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import setops  # noqa: F401  (set ops, rollup/cube, as-of join)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import analytics  # noqa: F401  (percentiles, having, grouping sets)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import streaming_queries  # noqa: F401  (declared streaming T1/T2/T6)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import tpch_more  # noqa: F401  (remaining TPC-H shapes J16-J27)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import window_fns  # noqa: F401  (lag/lead, ntile, pct_rank, frames)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import seriesops  # noqa: F401  (gap-fill, fuzzy match, regex)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import storage_queries  # noqa: F401  (S6 write side: compaction)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import llm_pipeline  # noqa: F401  (chunk/split/shuffle/pack)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import corpus  # noqa: F401  (repetition gates, inverted index, LM)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from . import tokenizer  # noqa: F401  (BPE merge training)
-except ImportError:  # pragma: no cover
-    pass
+from . import sketches  # noqa: F401,E402  (K1, K2, K4, K5)
+from . import graph  # noqa: F401,E402  (G1-G3)
+from . import text  # noqa: F401,E402  (dedup / text analysis)
+from . import similarity  # noqa: F401,E402  (ANN / embedding search)
+from . import generator_queries  # noqa: F401,E402  (S1)
+from . import multimodal_queries  # noqa: F401,E402  (binary columns)
+from . import setops  # noqa: F401,E402  (set ops, rollup/cube, as-of join)
+from . import analytics  # noqa: F401,E402  (percentiles, having, grouping sets)
+from . import streaming_queries  # noqa: F401,E402  (declared streaming T1/T2/T6)
+from . import tpch_more  # noqa: F401,E402  (remaining TPC-H shapes J16-J27)
+from . import window_fns  # noqa: F401,E402  (lag/lead, ntile, pct_rank, frames)
+from . import seriesops  # noqa: F401,E402  (gap-fill, fuzzy match, regex)
+from . import storage_queries  # noqa: F401,E402  (S6 write side: compaction)
+from . import llm_pipeline  # noqa: F401,E402  (chunk/split/shuffle/pack)
+from . import corpus  # noqa: F401,E402  (repetition gates, inverted index, LM)
+from . import tokenizer  # noqa: F401,E402  (BPE merge training)
 
 # ---------------------------------------------------------------------------
 # Declaration-order rotation.
@@ -188,24 +139,8 @@ _ROUND_HEAD = [
 
 
 def _rotate_head(head: list[str]) -> None:
-    # Degrade, don't die: a family module that failed its resilient
-    # try/except import above leaves its keys unregistered — rotate the
-    # keys that exist instead of crashing the whole driver entrypoint.
-    # (tests/test_oracle_parity.py pins the full head when everything
-    # imports, so silent drift is still caught in CI.)
-    missing = [k for k in head if k not in QUERIES]
-    if missing:
-        # A degraded head must be VISIBLE in driver logs: a typo'd key
-        # or a family import failure would otherwise silently change
-        # which queries get driver-signed this round.
-        import warnings
-
-        warnings.warn(
-            "query-registry head dropped unknown keys (family import "
-            f"failure or typo?): {missing}",
-            stacklevel=2,
-        )
-    head = [k for k in head if k in QUERIES]
+    # An unknown head key (a typo) raises KeyError at import, like a
+    # broken family module does.
     ordered = {k: QUERIES[k] for k in head}
     ordered.update((k, v) for k, v in QUERIES.items() if k not in ordered)
     QUERIES.clear()

@@ -73,10 +73,11 @@ def st1_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st2_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom stateful operator (T5, ``applyInPandasWithState``
-    running sketch — the Spark re-spec of the reference's hand-rolled
-    ``InsectDataStore`` keyed state) executed as a real stream and
-    reduced to its final per-key state.
+    """The custom stateful operator (T5 running sketch: count, sum and
+    a slot-wise-min MinHash as built-in aggregates whose partial state
+    lives in the state store — the Spark re-spec of the reference's
+    hand-rolled ``InsectDataStore`` keyed state) executed as a real
+    stream and reduced to its final per-key state.
 
     Update mode emits each key's cumulative state every micro-batch;
     the final state's count must equal the batch group-count — that

@@ -23,7 +23,7 @@ import shutil
 from datetime import datetime, timedelta
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import INSECT_EVENT_SCHEMA, parse_event_ts
@@ -140,10 +140,12 @@ def store_with_ttl(
     store = Path(store_dir)
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # One pass per batch: the write job also observes max(ts); an
+        # empty batch writes no partition and observes NULL.
+        seen = Observation()
         (
-            batch_df.withColumn(
+            batch_df.observe(seen, F.max(ts_col).alias("mx"))
+            .withColumn(
                 "event_hour",
                 F.date_format(ts_col, "yyyy-MM-dd-HH"),
             )
@@ -151,7 +153,7 @@ def store_with_ttl(
             .partitionBy("event_hour")
             .parquet(str(store))
         )
-        mx = batch_df.agg(F.max(ts_col)).collect()[0][0]
+        mx = seen.get["mx"]
         if mx is None:
             return
         horizon = mx - timedelta(hours=retention_hours)

@@ -2,8 +2,7 @@
 
 The reference's ``InsectDataStore`` is hand-rolled keyed state mutated
 per message under a lock (reference consumer.py:21-148).  The Spark
-re-spec is an ``applyInPandasWithState`` operator that maintains a
-*mergeable sketch* per key across micro-batches — the
+re-spec keeps a *mergeable sketch* per key across micro-batches — the
 "continuously-maintained sketches in streaming" path SURVEY §4 marks as
 the one genuine custom-code candidate:
 
@@ -12,121 +11,85 @@ the one genuine custom-code candidate:
 - slot-wise-min MinHash signature over user_id (≙ minwisehashing.py's
   accumulate-then-finalize, here never finalized: state IS the sketch)
 
-Each micro-batch updates state in Arrow-batched pandas (no per-row
-Python), and emits the key's current sketch — output mode ``update``.
-State size is O(num_perm) per key regardless of stream length, which is
-exactly why a sketch (and not a row buffer) is what survives 100 TB.
+All three are mergeable built-in aggregates (``count``, ``sum``,
+``min``), so the sketch is one declarative ``groupBy().agg()`` that runs
+in the JVM with no Python worker.  On a stream its partial aggregates
+live in the state store and each micro-batch emits the updated keys'
+cumulative sketch — output mode ``update``; on a static frame the same
+call is the batch twin.  State size is O(num_perm) per key regardless
+of stream length, which is exactly why a sketch (and not a row buffer)
+is what survives 100 TB.
 
-The per-slot hash is crc32 of ``f"{slot}:{user_id}"`` — deterministic
-and process-independent, so the batch twin (``batch_sketch``) computed
-via ``applyInPandas`` is bit-identical and the stream-batch equivalence
-property is testable.
+The per-slot hash is Spark's ``crc32`` of ``f"{slot}:{user_id}"`` —
+deterministic and process-independent, so stream and batch results are
+bit-identical and the stream-batch equivalence property is testable.
+A NULL ``user_id`` counts toward ``n`` but hashes to nothing; a key
+with no non-NULL ``user_id`` keeps the all-``Long.MaxValue`` signature.
+
+The transformWithState processors below keep Python state, because
+they need typed state and timers.
 """
 
 from __future__ import annotations
 
 import os
-import zlib
-from collections.abc import Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
 NUM_PERM_DEFAULT = 16
 
 OUTPUT_SCHEMA = (
     "event_type string, n bigint, total double, sig array<bigint>"
 )
-STATE_SCHEMA = "n bigint, total double, sig binary"
+_EMPTY_SLOT = 2**63 - 1  # Long.MaxValue: the min over no hashes
 
 
-def _slot_hashes(user_ids: np.ndarray, num_perm: int) -> np.ndarray:
-    """(num_perm, len(user_ids)) crc32 hashes — vectorized per slot."""
-    out = np.empty((num_perm, len(user_ids)), dtype=np.int64)
-    for slot in range(num_perm):
-        out[slot] = [
-            zlib.crc32(f"{slot}:{u}".encode()) for u in user_ids
-        ]
-    return out
-
-
-def _accumulate(
-    pdfs: Iterable[pd.DataFrame], n: int, total: float, sig: np.ndarray
-) -> tuple[int, float, np.ndarray]:
-    """Merge a batch of rows into (count, sum, slot-wise-min signature)."""
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        hashes = _slot_hashes(pdf["user_id"].to_numpy(), len(sig))
-        sig = np.minimum(sig, hashes.min(axis=1))
-    return n, total, sig
-
-
-def _empty_sig(num_perm: int) -> np.ndarray:
-    return np.full(num_perm, np.iinfo(np.int64).max, dtype=np.int64)
+def _sketch(events: DataFrame, num_perm: int) -> DataFrame:
+    """Per-event_type (count, value sum, slot-wise-min crc32 signature)
+    as built-in aggregates, projected to ``OUTPUT_SCHEMA``."""
+    uid = F.col("user_id").cast("string")
+    slots = [f"slot{s}" for s in range(num_perm)]
+    return (
+        events.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("value").alias("total"),
+            *[
+                F.min(F.crc32(F.concat(F.lit(f"{s}:"), uid))).alias(c)
+                for s, c in enumerate(slots)
+            ],
+        )
+        .select(
+            "event_type",
+            "n",
+            F.coalesce("total", F.lit(0.0)).alias("total"),
+            F.array(*[F.coalesce(c, F.lit(_EMPTY_SLOT)) for c in slots]).alias(
+                "sig"
+            ),
+        )
+    )
 
 
 def running_sketch(
     keyed_events: DataFrame, num_perm: int = NUM_PERM_DEFAULT
 ) -> DataFrame:
-    """Streaming keyed sketch: groupBy(event_type).applyInPandasWithState.
+    """Streaming keyed sketch, state in the state store.
 
     ``keyed_events`` must have columns (event_type, user_id, value).
-    Emits one row per key per micro-batch with the cumulative sketch.
+    Emits one row per updated key per micro-batch with the cumulative
+    sketch (output mode ``update``).
     """
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            n, total, sig_bytes = state.get
-            sig = np.frombuffer(sig_bytes, dtype=np.int64).copy()
-        else:
-            n, total, sig = 0, 0.0, _empty_sig(num_perm)
-        n, total, sig = _accumulate(pdfs, n, total, sig)
-        state.update((n, float(total), sig.tobytes()))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n": [n],
-                "total": [float(total)],
-                "sig": [sig.tolist()],
-            }
-        )
-
-    return keyed_events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _sketch(keyed_events, num_perm)
 
 
 def batch_sketch(
     events: DataFrame, num_perm: int = NUM_PERM_DEFAULT
 ) -> DataFrame:
-    """Batch twin of ``running_sketch`` (same hashes, same output schema)
-    for the stream-batch equivalence property (SURVEY §5.4)."""
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        n, total, sig = _accumulate([pdf], 0, 0.0, _empty_sig(num_perm))
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["event_type"].iloc[0]],
-                "n": [n],
-                "total": [float(total)],
-                "sig": [sig.tolist()],
-            }
-        )
-
-    return (
-        events.select("event_type", "user_id", "value")
-        .groupBy("event_type")
-        .applyInPandas(agg, schema=OUTPUT_SCHEMA)
-    )
+    """Batch twin of ``running_sketch`` (same aggregate, same output
+    schema) for the stream-batch equivalence property (SURVEY §5.4)."""
+    return _sketch(events, num_perm)
 
 
 # --- transformWithState (Spark 4.x) variant ----------------------------------
@@ -294,12 +257,11 @@ class RunningTotalsProcessor:
     """Spark 4 ``transformWithStateInPandas`` processor: per-key running
     (count, sum) in a ``ValueState``, optionally TTL'd.
 
-    This is the modern successor of the ``applyInPandasWithState`` op
-    above: typed state handles (value/list/map) with per-state TTL
-    replace the single state tuple + timeout conf, which maps directly
-    onto the reference's TTL'd keyed store (consumer.py:119-148) —
-    state the engine expires per key instead of a hand-rolled purge
-    loop over 7 dicts.  RocksDB state store required (the provider the
+    Unlike the built-in-aggregate sketch above, it keeps Python state:
+    typed state handles (value/list/map) with per-state TTL and timers,
+    which maps directly onto the reference's TTL'd keyed store
+    (consumer.py:119-148) — state the engine expires per key instead
+    of a hand-rolled purge loop over 7 dicts.  RocksDB state store required (the provider the
     scale path would run anyway: state spills off-heap, snapshots to
     the checkpoint).  Environment note: the TWS Python driver worker
     imports protobuf; containers without ``google.protobuf`` can import

@@ -127,7 +127,8 @@ def test_sim4_assignment_partial_aggregates(spark):
 def test_no_row_at_a_time_python_udfs():
     """Policy guard (SURVEY §2.12): zero row-at-a-time Python UDFs in
     the package — the only Python on data paths is Arrow-batched
-    (mapInPandas / applyInPandas / applyInPandasWithState)."""
+    (mapInPandas / transformWithStateInPandas); the running sketch is
+    built-in aggregates."""
     import pathlib
     import re
 

@@ -14,7 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .conftest import SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE
 
 RAW_EVENTS_SCHEMA = T.StructType(
     [
@@ -127,6 +127,45 @@ def test_store_with_ttl_prunes_old_partitions(spark, tmp_path):
     assert all(h >= "2024-02-29" for h in hours), hours
 
 
+def test_store_with_ttl_empty_batch_is_a_noop(spark, tmp_path):
+    """T3: a zero-row micro-batch leaves the store exactly as it was —
+    no new files or partitions, nothing evicted."""
+    from ecostream.generator import insect_events
+    from ecostream.streaming import store_with_ttl
+
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    events = insect_events(spark, 50)
+    events.write.parquet(str(src_dir / "batch=0"))
+    stream = spark.readStream.schema(events.schema).parquet(
+        str(src_dir / "batch=*")
+    )
+    store_dir = tmp_path / "store"
+
+    def store_files():
+        return sorted(str(f.relative_to(store_dir)) for f in store_dir.rglob("*.parquet"))
+
+    q = store_with_ttl(
+        stream, str(store_dir), checkpoint=str(tmp_path / "ckpt")
+    ).start()
+    try:
+        q.processAllAvailable()
+        before = store_files()
+        assert before, "store is empty"
+        last = q.lastProgress["batchId"]
+
+        spark.createDataFrame([], events.schema).coalesce(1).write.parquet(
+            str(src_dir / "batch=1")
+        )
+        q.processAllAvailable()
+        assert q.lastProgress["batchId"] == last + 1
+        assert q.lastProgress["numInputRows"] == 0
+    finally:
+        q.stop()
+        q.awaitTermination(60)
+    assert store_files() == before
+
+
 def test_generator_deterministic_and_native_schema(spark):
     """S1: repeat-run identical; nested schema matches SURVEY §1.1;
     streaming variant builds against the rate source (not executed —
@@ -208,6 +247,74 @@ def test_stateful_running_sketch_stream_equals_batch(spark, tmp_path):
         assert final[k]["n"] == expected[k]["n"], k
         assert abs(final[k]["total"] - expected[k]["total"]) < 1e-6, k
         assert list(final[k]["sig"]) == list(expected[k]["sig"]), k
+
+
+def _crc32_sketch_oracle(pdf, num_perm=16):
+    """The pandas formulation the native sketch replaced: per
+    event_type, (count, value sum, slot-wise min of
+    ``zlib.crc32(f"{slot}:{user_id}")``).  Valid for NULL-free
+    ``user_id`` only — pandas hands int64-with-NULL over as float64."""
+    import zlib
+
+    assert pdf["user_id"].dtype == "int64", pdf["user_id"].dtype
+    out = {}
+    for key, g in pdf.groupby("event_type"):
+        uids = g["user_id"].to_numpy()
+        sig = [
+            min(zlib.crc32(f"{slot}:{u}".encode()) for u in uids)
+            for slot in range(num_perm)
+        ]
+        out[key] = (len(g), float(g["value"].sum()), sig)
+    return out
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
+def test_batch_sketch_bit_identical_to_crc32_oracle(spark, sf_dir):
+    """The built-in-aggregate sketch equals the pandas/zlib formula it
+    replaced: exactly on ``n`` and every MinHash slot, ``total`` within
+    float-summation-order tolerance."""
+    from ecostream.schema import load_table
+    from ecostream.streaming import batch_sketch
+
+    events = load_table(spark, sf_dir, "events").select(
+        "event_type", "user_id", "value"
+    )
+    expected = _crc32_sketch_oracle(events.toPandas())
+    got = {r["event_type"]: r for r in batch_sketch(events).collect()}
+    assert set(got) == set(expected)
+    for k, (n, total, sig) in expected.items():
+        assert got[k]["n"] == n, k
+        assert abs(got[k]["total"] - total) < 1e-6, k
+        assert list(got[k]["sig"]) == sig, k
+
+
+def test_sketch_null_user_id_and_value(spark):
+    """Hostile input: NULL ``user_id`` rows count toward ``n`` but hash
+    to nothing, so they leave the signature alone; a key with no
+    non-NULL ``user_id`` keeps the all-Long.MaxValue signature; a key
+    whose values are all NULL sums to 0.0."""
+    import zlib
+
+    from ecostream.streaming import batch_sketch
+
+    rows = [
+        ("a", 5, 1.0),
+        ("a", None, 2.0),
+        ("a", 7, None),
+        ("b", None, None),
+        ("b", None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_type string, user_id bigint, value double"
+    )
+    got = {r["event_type"]: r for r in batch_sketch(df).collect()}
+    sig_a = [
+        min(zlib.crc32(f"{s}:{u}".encode()) for u in (5, 7)) for s in range(16)
+    ]
+    assert (got["a"]["n"], got["a"]["total"]) == (3, 3.0)
+    assert list(got["a"]["sig"]) == sig_a
+    assert (got["b"]["n"], got["b"]["total"]) == (2, 0.0)
+    assert list(got["b"]["sig"]) == [2**63 - 1] * 16
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
