@@ -52,7 +52,7 @@ def with_prefix_sum(
     """
     partition_cols = partition_cols or []
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = num_partitions or spark.sparkContext.defaultParallelism
     ranged = (
         df.repartitionByRange(n, *partition_cols, *order_cols)
         .withColumn(_PID, F.spark_partition_id())

@@ -1572,6 +1572,7 @@ g13_hits_authorities.__doc__ = g13_hits_authorities.__doc__.format(
 
 _G14_ROUNDS = 3
 _G14_ALPHA_MILLI = 150  # restart probability 0.15
+_G14_MAX_STATES = 256  # declared event_type state-space cap (driver model)
 
 
 def _g14_oracle(rounds: int = _G14_ROUNDS) -> str:
@@ -1679,28 +1680,28 @@ def g14_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL event_types carry no rank mass (the former per-round join
     # gave them score 0 and they cannot seed); dropping them here keeps
     # the collect sortable, and an empty events table yields an empty
-    # result instead of a min() ValueError (ADVICE r12).
+    # result instead of a min() ValueError (ADVICE r12).  Both collects
+    # are capped by the declared state space (edges are state pairs), so
+    # a pathological events table fails loudly instead of OOMing.
+    from ..functions.guards import bounded_collect
+
     states = sorted(
         r[0]
-        for r in ev.select("event_type")
-        .where(F.col("event_type").isNotNull())
-        .distinct()
-        .collect()
+        for r in bounded_collect(
+            ev.select("event_type")
+            .where(F.col("event_type").isNotNull())
+            .distinct(),
+            _G14_MAX_STATES,
+            "g14 states (distinct event_type)",
+        )
     )
     if not states:
         return spark.createDataFrame(
             [], "event_type string, ppr_micro long, rnk long"
         )
-    # Defensive cardinality guard (VERDICT r12 #3): the collect is
-    # bounded by |event_type|² BY THE DATA MODEL (edges are (cur, nxt)
-    # pairs of event types), but nothing upstream enforces it — cap it
-    # so a pathological events table fails loudly instead of OOMing
-    # the driver (the cc.py limit-probe device).
-    from ..functions.guards import bounded_collect
-
     edge_rows = bounded_collect(
         pairs.join(tot, "cur"),
-        len(states) ** 2,
+        _G14_MAX_STATES**2,
         "g14 transition edges (|event_type|² model bound)",
     )
     seed = min(states)

@@ -18,7 +18,9 @@ live in the state store and each micro-batch emits the updated keys'
 cumulative sketch — output mode ``update``; on a static frame the same
 call is the batch twin.  State size is O(num_perm) per key regardless
 of stream length, which is exactly why a sketch (and not a row buffer)
-is what survives 100 TB.
+is what survives 100 TB.  The keys are a handful of event types, so
+the engine session gives the state one partition (``session.py``); a
+checkpoint first started at another width keeps its recorded count.
 
 The per-slot hash is Spark's ``crc32`` of ``f"{slot}:{user_id}"`` —
 deterministic and process-independent, so stream and batch results are

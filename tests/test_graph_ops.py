@@ -275,3 +275,28 @@ def test_g14_empty_and_null_events(spark, tmp_path):
     out = g14_personalized_pagerank(spark, d_null).collect()
     assert out  # non-empty, no TypeError from sorting None
     assert all(r["event_type"] is not None for r in out)
+
+
+def test_g14_states_collect_is_capped(spark, tmp_path):
+    """g14's driver-side state space is capped: an events table with
+    more distinct event_types than the declared cap fails loudly
+    instead of collecting them all."""
+    import pytest
+
+    from ecostream.queries.graph import (
+        _G14_MAX_STATES,
+        g14_personalized_pagerank,
+    )
+
+    n = _G14_MAX_STATES + 1
+    d = str(tmp_path / "wide")
+    spark.range(n).selectExpr(
+        "id AS event_id",
+        "timestamp_seconds(id) AS ts",
+        "id % 7 AS user_id",
+        "concat('t', id) AS event_type",
+        "1.0D AS value",
+        "'{}' AS props",
+    ).write.parquet(f"{d}/events.parquet")
+    with pytest.raises(ValueError, match="g14 states"):
+        g14_personalized_pagerank(spark, d).collect()

@@ -173,9 +173,12 @@ def test_integer_domain_round6_property():
 
 def test_round4_results_invariant_to_shuffle_partitions(spark):
     """Re-plan a representative set of round-4 operators under a
-    different spark.sql.shuffle.partitions and require IDENTICAL rows:
-    hash-order selection, integer-quantized sums, pair counting, and
-    sketch estimators all claim partitioning-invariance — pin it."""
+    different shuffle width and require IDENTICAL rows: hash-order
+    selection, integer-quantized sums, pair counting, and sketch
+    estimators all claim partitioning-invariance — pin it.  Batch
+    exchanges start at AQE's initialPartitionNum, so both it and
+    spark.sql.shuffle.partitions move, and the effective batch width
+    is asserted before re-planning."""
     from ecostream.queries import QUERIES
 
     names = [
@@ -185,18 +188,26 @@ def test_round4_results_invariant_to_shuffle_partitions(spark):
         "d10_sparse_cosine_verify",
         "qc1_linear_quality",
     ]
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
     base = {
         n: sorted(map(tuple, QUERIES[n](spark, SF_SMOKE).collect()))
         for n in names
     }
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        for k in keys:
+            spark.conf.set(k, "7")
+        width = spark._jsparkSession.sessionState().conf().numShufflePartitions()
+        assert width == 7, width
         for n in names:
             got = sorted(map(tuple, QUERIES[n](spark, SF_SMOKE).collect()))
             assert got == base[n], f"{n} changed under repartitioning"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_anon1_partitions_the_customer_table(spark):

@@ -84,6 +84,26 @@ def test_prefix_sum_plan_has_no_single_partition_window(spark):
     assert "SinglePartition" not in plan, plan
 
 
+def test_prefix_sum_default_width_is_default_parallelism(spark, monkeypatch):
+    """Without ``num_partitions`` the range spans the default
+    parallelism, not the session's one-partition stream-state width."""
+    from ecostream.functions.prefix import with_prefix_sum
+
+    df = spark.range(64).selectExpr("id AS k", "id AS x")
+    widths = []
+    cls = type(df)
+    orig = cls.repartitionByRange
+
+    def spy(self, n, *cols):
+        widths.append(n)
+        return orig(self, n, *cols)
+
+    monkeypatch.setattr(cls, "repartitionByRange", spy)
+    assert with_prefix_sum(df, ["k"], "x").count() == 64
+    assert widths == [spark.sparkContext.defaultParallelism]
+    assert widths[0] > 1
+
+
 def test_prefix_sum_edge_cases(spark):
     """Empty input, single row, decimal values, and more partitions
     than rows all behave like the window form."""

@@ -249,6 +249,81 @@ def test_stateful_running_sketch_stream_equals_batch(spark, tmp_path):
         assert list(final[k]["sig"]) == list(expected[k]["sig"]), k
 
 
+def _state_partitions(ckpt):
+    parts = (Path(ckpt) / "state" / "0").iterdir()
+    return sorted(int(p.name) for p in parts if p.name.isdigit())
+
+
+def test_stream_state_width_is_split_from_batch_width(spark, tmp_path):
+    """A stateful stream query first started in the engine session keeps
+    one state partition, while batch exchanges keep the session's AQE
+    width; a checkpoint first started at 4 partitions keeps 4 across a
+    restart and still converges to the batch twin."""
+    from ecostream.schema import load_table
+    from ecostream.streaming import batch_sketch, running_sketch
+
+    # 8 from conftest, or the core count once an in-process CLI call has
+    # re-applied get_spark()'s defaults to the shared session.
+    width = int(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    )
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.numShufflePartitions() == width > 1
+    events = load_table(spark, SF_SMOKE, "events").select(
+        "event_type", "user_id", "value"
+    )
+    src = str(tmp_path / "src")
+    events.where(F.col("user_id") % 2 == 0).coalesce(1).write.parquet(src)
+
+    def sketch_query(ckpt):
+        stream = spark.readStream.schema(events.schema).parquet(src)
+        return running_sketch(stream).writeStream.option("checkpointLocation", ckpt)
+
+    fresh = str(tmp_path / "fresh")
+    q = (
+        sketch_query(fresh)
+        .format("memory")
+        .queryName("sketch_width")
+        .outputMode("update")
+        .start()
+    )
+    _wait(q)
+    offsets = (Path(fresh) / "offsets" / "0").read_text()
+    assert '"spark.sql.shuffle.partitions":"1"' in offsets
+    assert _state_partitions(fresh) == [0]
+
+    final = {}
+
+    def keep(df, _batch_id):
+        final.update({r["event_type"]: r for r in df.collect()})
+
+    def drain(ckpt):
+        _wait(sketch_query(ckpt).outputMode("update").foreachBatch(keep).start())
+
+    old = str(tmp_path / "old")
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "4")
+        drain(old)
+    finally:
+        spark.conf.set(key, before)
+    events.where(F.col("user_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    drain(old)
+    assert '"spark.sql.shuffle.partitions":"4"' in (
+        Path(old) / "offsets" / "1"
+    ).read_text()
+    assert _state_partitions(old) == [0, 1, 2, 3]
+    expected = {r["event_type"]: r for r in batch_sketch(events).collect()}
+    assert set(final) == set(expected)
+    for k, e in expected.items():
+        assert final[k]["n"] == e["n"], k
+        assert abs(final[k]["total"] - e["total"]) < 1e-6, k
+        assert list(final[k]["sig"]) == list(e["sig"]), k
+
+
 def _crc32_sketch_oracle(pdf, num_perm=16):
     """The pandas formulation the native sketch replaced: per
     event_type, (count, value sum, slot-wise min of
